@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from myfitnesspaw_spark.checkpoints import materialize_instance_sized
+from myfitnesspaw_spark.config import SHUFFLE_PARTITIONS, conf_override
 from myfitnesspaw_spark.functions.text import (
     minhash_hashes,
     minhash_signature,
@@ -799,9 +800,9 @@ def simhash_pairs(
     )
 
 
-class _loop_shuffle_partitions:
-    """Size ``spark.sql.shuffle.partitions`` to the ITERATIVE graph for
-    the duration of a CC loop, restoring the prior value on exit.
+def loop_shuffle_partitions(spark, n_edges: int) -> int:
+    """Shuffle-partition count for an ITERATIVE graph loop (CC,
+    PageRank) over ``n_edges`` edges.
 
     The contracted edge set is orders of magnitude smaller than the
     corpus the pairs came from (47 edges at sf0.1 vs 5000 docs), yet
@@ -810,25 +811,12 @@ class _loop_shuffle_partitions:
     one partition per ~50k edges, clamped to [4, current]: big graphs
     keep the cluster-sized spread, small graphs stop paying 32 empty
     tasks per shuffle per round.  Same state-volume-not-core-count
-    policy as streaming/rollup.py::state_shuffle_partitions.
+    policy as ``config.state_shuffle_partitions``.
     """
-
-    def __init__(self, spark, n_edges: int):
-        self.spark = spark
-        self.prior = spark.conf.get("spark.sql.shuffle.partitions", None)
-        cur = int(self.prior or spark.sparkContext.defaultParallelism)
-        self.target = max(4, min(cur, n_edges // 50_000 + 4))
-
-    def __enter__(self):
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.target))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prior is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prior)
-        return False
+    cur = int(
+        spark.conf.get(SHUFFLE_PARTITIONS, None) or spark.sparkContext.defaultParallelism
+    )
+    return max(4, min(cur, n_edges // 50_000 + 4))
 
 
 def connected_components(
@@ -874,7 +862,9 @@ def connected_components(
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    with _loop_shuffle_partitions(edges.sparkSession, e_obs.get["n"]):
+    spark = edges.sparkSession
+    n_parts = loop_shuffle_partitions(spark, e_obs.get["n"])
+    with conf_override(spark, SHUFFLE_PARTITIONS, n_parts):
         labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
             "lbl", F.col("node")
         )
@@ -986,7 +976,8 @@ def connected_components_star(
     prev: tuple | None = None
     rounds = 0
     converged = False
-    with _loop_shuffle_partitions(spark, n_edges):
+    n_parts = loop_shuffle_partitions(spark, n_edges)
+    with conf_override(spark, SHUFFLE_PARTITIONS, n_parts):
         for _ in range(max_iter):
             # Fixed-point witness: count + endpoint sums + an order-
             # insensitive content hash of the edge multiset — one

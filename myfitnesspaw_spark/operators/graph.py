@@ -48,7 +48,8 @@ def pagerank_integer(
     """
     from pyspark.sql import Observation
 
-    from myfitnesspaw_spark.operators.dedup import _loop_shuffle_partitions
+    from myfitnesspaw_spark.config import SHUFFLE_PARTITIONS, conf_override
+    from myfitnesspaw_spark.operators.dedup import loop_shuffle_partitions
 
     # Materialize the pair-derivation lineage ONCE; the edge count
     # rides the same checkpoint job via observe (r20: no separate
@@ -62,7 +63,9 @@ def pagerank_integer(
     # are orders of magnitude smaller than the corpus the pairs came
     # from, so the per-round join + sum must not pay a corpus-sized
     # shuffle-partition count in empty-task scheduling overhead.
-    with _loop_shuffle_partitions(edges.sparkSession, e_obs.get["n"]):
+    spark = edges.sparkSession
+    n_parts = loop_shuffle_partitions(spark, e_obs.get["n"])
+    with conf_override(spark, SHUFFLE_PARTITIONS, n_parts):
         deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         nodes = deg.select(F.col("s").alias("node"), "deg").localCheckpoint(
             eager=False

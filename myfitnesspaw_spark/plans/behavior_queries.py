@@ -29,6 +29,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myfitnesspaw_spark.config import conf_override
 from myfitnesspaw_spark.functions.numeric import epoch_us
 from myfitnesspaw_spark.sources import load_table
 
@@ -412,14 +413,10 @@ GROUP BY 1, 2
 def recursive_user_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Depth = per-user date span (29 days in the testdata).  Raise the
     # recursion ceiling defensively so a wider-span dataset fails on
-    # semantics, not on the default 100-level limit — and restore the
-    # prior value afterwards so the shared session is not perturbed
-    # (same save/restore discipline as streaming/rollup.py's shuffle-
-    # partition override).  The limit is consulted when the recursive
-    # plan is resolved, which `spark.sql` does eagerly.
-    prior = spark.conf.get("spark.sql.cteRecursionLevelLimit", None)
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "1000")
-    try:
+    # semantics, not on the default 100-level limit, for this query
+    # only.  The limit is consulted when the recursive plan is
+    # resolved, which `spark.sql` does eagerly.
+    with conf_override(spark, "spark.sql.cteRecursionLevelLimit", 1000):
         load_table(spark, sf_dir, "events").createOrReplaceTempView("events_rus")
         return spark.sql(
             """
@@ -437,11 +434,6 @@ def recursive_user_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day
             """
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.cteRecursionLevelLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionLevelLimit", prior)
 
 
 RECURSIVE_USER_SPINE_ORACLE = """

@@ -239,13 +239,9 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cardio_minutes").alias("cardio_minutes"),
         F.sum("water").alias("water"),
     )
-    from myfitnesspaw_spark.streaming.rollup import state_shuffle_partitions
+    from myfitnesspaw_spark.config import state_partition_scope
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         query = (
             agg.writeStream.format("memory")
             .queryName("mfp_api_stream_rollup_sink")
@@ -254,9 +250,6 @@ def mfp_api_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.table("mfp_api_stream_rollup_sink")
 
 

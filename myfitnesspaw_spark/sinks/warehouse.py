@@ -20,9 +20,13 @@ Spark warehouse equivalent:
 
 from __future__ import annotations
 
+import hashlib
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from myfitnesspaw_spark.config import store_buckets, store_rebalance
 
 #: The reference's 9-table schema (sql.py:7-145), Spark-typed.
 SILVER_TABLES: dict[str, str] = {
@@ -220,41 +224,21 @@ def store_path(name: str, sf_dir: str) -> str:
 def write_index_store(df: DataFrame, path: str) -> None:
     """Persist an index/state table (overwrite = the run's snapshot).
 
-    File-count policy (r21, guide §6 "small files hurt twice"):
-    REBALANCE before the write, ON BY DEFAULT — without it the file
-    count is whatever partitioning the upstream compute happened to
-    have, which in local mode tracks the CORE COUNT (``scatter`` fans
-    the corpus to ``defaultParallelism``), and at 100 TB tracks the
-    width of the producing shuffle — thousands of near-empty files
-    whose listing/open overhead every read-back pays.  The hint
-    inserts an AQE-sized exchange (partitions coalesce toward
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so file
-    sizes track the advisory target at any scale.
-
-    History of the default (VERDICT r20 #1/#2): r20 measured plain
-    beating rebalance in a per-arm-per-process matrix and defaulted it
-    OFF; the driver's r20 bench then showed the two heaviest
-    store-writing queries running FASTER AT 8 CORES THAN 32 (file
-    count tracked the core count), and the r21 re-measurement found
-    the r20 matrix was confounded by ambient-load drift between arms.
-    Interleaved same-session A/B at sf0.1 (r21): the knob is neutral
-    within rep noise on the full store-backed queries at BOTH 32 and
-    8 cores, while the isolated store-consumer leg of
-    ``indexed_cc_refresh`` reads 2.09 s from a 32-file plain store vs
-    1.34 s from a 4-file rebalanced one (−36%).  Neutral-to-better at
-    bench scale and strictly better at 100 TB ⇒ default ON.  Opt out
-    per deployment via conf
-    ``spark.myfitnesspaw.store.rebalance=false`` or env
-    ``SPARK_GRAFT_STORE_REBALANCE=0``; the knob is read per write so
-    tests can pin both branches."""
-    import os as _os
-
-    knob = (
-        df.sparkSession.conf.get("spark.myfitnesspaw.store.rebalance", None)
-        or _os.environ.get("SPARK_GRAFT_STORE_REBALANCE", "")
-        or "true"
-    )
-    rebalance = str(knob).lower() not in ("0", "false")
+    File-count policy: REBALANCE before the write unless conf
+    ``spark.myfitnesspaw.store.rebalance`` is false, read per write.
+    Without the hint the file count is whatever partitioning the
+    upstream compute happened to have, which in local mode tracks the
+    CORE COUNT (``scatter`` fans the corpus to ``defaultParallelism``)
+    and at 100 TB tracks the width of the producing shuffle —
+    thousands of near-empty files whose listing/open overhead every
+    read-back pays.  The hint inserts an AQE-sized exchange
+    (partitions coalesce toward
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so file sizes
+    track the advisory target at any scale.  Measured at sf0.1: neutral
+    on the full store-backed queries at 32 and 8 cores, and the store
+    reader of ``indexed_cc_refresh`` ran 2.09 s over a 32-file plain
+    store vs 1.34 s over a 4-file rebalanced one."""
+    rebalance = store_rebalance(df.sparkSession)
     (df.hint("rebalance") if rebalance else df).write.mode("overwrite").parquet(path)
 
 
@@ -267,10 +251,10 @@ def write_bucketed_index_store(
     df: DataFrame, path: str, bucket_col: str, buckets: int | None = None
 ) -> DataFrame:
     """Persist an index table BUCKETED by its primary read key and
-    return the bucketed read-back — §6 "layout for the reader"
-    (VERDICT r20 #3): a store whose every refresh re-shuffles it by
-    the same key should be written hash-clustered by that key ONCE, so
-    readers' windows/aggregations/joins on the key start from
+    return the bucketed read-back, laid out for its reader: a store
+    whose every refresh re-shuffles it by the same key should be
+    written hash-clustered by that key ONCE, so readers'
+    windows/aggregations/joins on the key start from
     ``HashPartitioning(bucket_col)`` instead of an Exchange.
 
     Mechanics: external table (data lives at ``path``, the same
@@ -278,38 +262,35 @@ def write_bucketed_index_store(
     in-memory catalog, which dies with the session) because bare
     parquet read-back carries no partitioning metadata — only a
     bucketed catalog table's scan reports its hash partitioning to
-    the planner.  The pre-write ``repartition(buckets, bucket_col)``
-    keeps one file per bucket: ``bucketBy`` alone writes one file per
-    (upstream partition × bucket), the classic bucketed-small-files
-    trap.
+    the planner.  The table is named from the path's basename plus a
+    hash of the full path, so distinct stores never share a name.  The
+    pre-write ``repartition(buckets, bucket_col)`` keeps one file per
+    bucket: ``bucketBy`` alone writes one file per (upstream partition
+    × bucket), the classic bucketed-small-files trap.
 
     ``buckets`` defaults to conf ``spark.myfitnesspaw.store.buckets``
     (default 8).  It is a LAYOUT constant of the store, not a
     core-count echo: a production deployment sizes it so each bucket
     approaches the AQE advisory partition size at the store's real
-    volume, and the bench default stays fixed across core counts so
-    the driver's 8-core scaling run reads the same layout.
-    ``buckets <= 0`` falls back to the plain (non-catalog) store —
-    the escape hatch for deployments that cannot register session
-    tables, and the in-session A/B toggle the r21 probes used.
+    volume, and the default stays fixed across core counts so every
+    core count reads the same layout.  ``buckets <= 0`` falls back to
+    the plain (non-catalog) store — the escape hatch for deployments
+    that cannot register session tables.
 
     Do NOT ``localCheckpoint`` the returned frame: the checkpoint
     replaces the scan with a LogicalRDD and the planner forgets the
-    bucket partitioning (measured r21: the checkpointed form re-gains
-    all 4 exchanges the bucketed scan removes).
+    bucket partitioning (the checkpointed form re-gains all 4
+    exchanges the bucketed scan removes).
     """
-    import re as _re
-
     spark = df.sparkSession
     if buckets is None:
-        buckets = int(
-            spark.conf.get("spark.myfitnesspaw.store.buckets", None)
-            or _os_environ_get("SPARK_GRAFT_STORE_BUCKETS", "8")
-        )
+        buckets = store_buckets(spark)
     if buckets <= 0:
         write_index_store(df, path)
         return spark.read.schema(df.schema).parquet(path)
-    table = _re.sub(r"[^A-Za-z0-9_]", "_", _basename(path))
+    full = _os.path.abspath(path)
+    digest = hashlib.sha1(full.encode()).hexdigest()[:8]
+    table = re.sub(r"[^A-Za-z0-9_]", "_", _os.path.basename(full)) + "_" + digest
     (
         df.repartition(buckets, bucket_col)
         .write.mode("overwrite")
@@ -318,15 +299,3 @@ def write_bucketed_index_store(
         .saveAsTable(table)
     )
     return spark.table(table)
-
-
-def _os_environ_get(key: str, default: str) -> str:
-    import os as _os
-
-    return _os.environ.get(key, default)
-
-
-def _basename(path: str) -> str:
-    import os as _os
-
-    return _os.path.basename(_os.path.normpath(path))

@@ -21,11 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from myfitnesspaw_spark.config import state_partition_scope
 from myfitnesspaw_spark.functions.numeric import epoch_us
-from myfitnesspaw_spark.streaming.rollup import (
-    read_events_stream,
-    state_shuffle_partitions,
-)
+from myfitnesspaw_spark.streaming.rollup import read_events_stream
 
 
 def stream_stream_click_error(
@@ -70,11 +68,7 @@ def stream_stream_click_error(
         "inner",
     )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         query = (
             joined.writeStream.format("memory")
             .queryName(sink_name)
@@ -83,9 +77,6 @@ def stream_stream_click_error(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     return spark.table(sink_name).select(
         "click_id",
@@ -147,11 +138,7 @@ def stream_stream_click_error_outer(
         "leftOuter",
     )
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         query = (
             joined.writeStream.format("memory")
             .queryName(sink_name)
@@ -160,9 +147,6 @@ def stream_stream_click_error_outer(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     return spark.table(sink_name).select(
         "click_id",

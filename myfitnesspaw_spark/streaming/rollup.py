@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from myfitnesspaw_spark.config import state_partition_scope
 from myfitnesspaw_spark.functions.numeric import money_cents
 from myfitnesspaw_spark.streaming.lint_hook import lint_batch_plan
 
@@ -148,27 +149,6 @@ def stream_table_source(
         )
     glob_base = os.path.abspath(sf_dir) if colon_segment else sf_dir
     return reader.option("pathGlobFilter", f"{name}.parquet").parquet(glob_base)
-
-def state_shuffle_partitions(spark: SparkSession) -> int:
-    """Shuffle-partition count for STATEFUL streaming queries.
-
-    The state-store partition count is frozen at a streaming query's
-    first run, and every partition carries fixed per-store cost (store
-    init, commit files, maintenance) EVERY micro-batch — a
-    stream-stream join holds 4 stores per partition.  Sizing it to
-    ``defaultParallelism`` (the right call for batch shuffles) made the
-    fixed cost dominate: the stream-stream join at sf0.1 ran 7.3 s with
-    32 state partitions vs 2.5 s with 8 (measured, 3× repeatable).
-    State partitions should track STATE VOLUME, not core count —
-    default to a quarter of the cores (min 4), overridable via the
-    ``spark.myfitnesspaw.stateShufflePartitions`` conf for deployments
-    whose watermark-bounded state actually needs more spread.
-    """
-    override = spark.conf.get("spark.myfitnesspaw.stateShufflePartitions", None)
-    if override:
-        return int(override)
-    return max(4, spark.sparkContext.defaultParallelism // 4)
-
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -337,14 +317,7 @@ def streaming_hourly_rollup(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    # The state-store partition count is frozen at the query's first
-    # run from spark.sql.shuffle.partitions; size it to the cluster
-    # (a caller-provided session may still carry the 200 default).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         state = _drain_update_merge(
             agg,
             ["win", "event_type"],
@@ -352,9 +325,6 @@ def streaming_hourly_rollup(
             sink_name,
             multi_batch_exact=drain_watermark is not None,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return state.select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
         "event_type",
@@ -390,11 +360,7 @@ def streaming_sliding_rollup(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         state = _drain_update_merge(
             agg,
             ["win", "event_type"],
@@ -402,9 +368,6 @@ def streaming_sliding_rollup(
             sink_name,
             multi_batch_exact=drain_watermark is not None,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return state.select(
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
         "event_type",
@@ -451,11 +414,7 @@ def streaming_dedup_counts(
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_user_minutes"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         query = (
             dedup.writeStream.format("memory")
             .queryName(sink_name)
@@ -464,9 +423,6 @@ def streaming_dedup_counts(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.table(sink_name)
 
 
@@ -506,22 +462,14 @@ def streaming_static_enrich(
             F.sum(money_cents(F.col("value"))).alias("value_cents"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
-        state = _drain_update_merge(
+    with state_partition_scope(spark):
+        return _drain_update_merge(
             agg,
             ["c_mktsegment", "event_type"],
             f"{sink_name}_state",
             sink_name,
             multi_batch_exact=True,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state
 
 
 def streaming_dedup_within_watermark_counts(
@@ -555,22 +503,14 @@ def streaming_dedup_within_watermark_counts(
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_user_minutes"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
-        state = _drain_update_merge(
+    with state_partition_scope(spark):
+        return _drain_update_merge(
             dedup,
             ["event_type"],
             f"{sink_name}_state",
             sink_name,
             multi_batch_exact=True,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state
 
 
 def streaming_lsh_ingest_probe(
@@ -644,19 +584,11 @@ def streaming_lsh_ingest_probe(
 
     hits = bands.join(store, ["band", "key"])
     agg = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_band_hits"))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
-        state = _drain_update_merge(
+    with state_partition_scope(spark):
+        return _drain_update_merge(
             agg,
             ["doc_id"],
             f"{sink_name}_state",
             sink_name,
             multi_batch_exact=True,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return state

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from myfitnesspaw_spark.config import state_partition_scope
 from myfitnesspaw_spark.functions.numeric import epoch_us, money_cents, ntz_from_us
-from myfitnesspaw_spark.streaming.rollup import state_shuffle_partitions
 
 DEFAULT_GAP_MIN = 30
 
@@ -185,11 +185,7 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     spark = events_stream.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         query = (
             sessions.writeStream.format("memory")
             .queryName(sink_name)
@@ -198,9 +194,6 @@ def sessionize_stream(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     return spark.table(sink_name).select(
         "user_id",

@@ -18,7 +18,7 @@ per-user dense vector of all types.
 Scale shape: state volume is Σ_user |distinct types seen|, bounded by
 (users × type cardinality) regardless of stream length; each
 micro-batch shuffles only its own rows to the state partitions
-(sized by ``state_shuffle_partitions``, never defaultParallelism);
+(sized by ``config.state_shuffle_partitions``, never defaultParallelism);
 emission is update-mode (touched entries only), drained through the
 same keyed ``foreachBatch`` merge every other stateful query in this
 package uses.  All aggregate arithmetic is exact integers — cents and
@@ -40,11 +40,9 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
+from myfitnesspaw_spark.config import state_partition_scope
 from myfitnesspaw_spark.functions.numeric import epoch_us, money_cents
-from myfitnesspaw_spark.streaming.rollup import (
-    _drain_update_merge,
-    state_shuffle_partitions,
-)
+from myfitnesspaw_spark.streaming.rollup import _drain_update_merge
 
 # The v2 Python state protocol rides a protobuf channel
 # (pyspark/sql/streaming/proto/StateMessage_pb2) — `protobuf` is a
@@ -196,11 +194,7 @@ def tws_user_type_rollup(
         money_cents(F.col("value")).alias("cents"),
     )
     spark = events_stream.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_shuffle_partitions(spark))
-    )
-    try:
+    with state_partition_scope(spark):
         if HAS_TWS_RUNTIME:
             rolled = prepped.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=_UserTypeRollup(),
@@ -224,8 +218,3 @@ def tws_user_type_rollup(
             state_view="tws_user_type_rollup_state",
             sink_name=sink_name,
         )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")

@@ -44,10 +44,7 @@ def host_cal_spot(spark) -> float:
 
 def main() -> int:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 2
-    spark = get_spark(
-        "banded_pair_probe",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None,
-    )
+    spark = get_spark("banded_pair_probe")
     print(f"load1={os.getloadavg()[0]:.2f} host_cal_spot={host_cal_spot(spark):.3f}",
           flush=True)
     sides = {1: build_scaled(spark, 1), 64: build_scaled(spark, 64),

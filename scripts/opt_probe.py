@@ -48,9 +48,7 @@ def main() -> None:
     ap.add_argument("--no-time", action="store_true")
     args = ap.parse_args()
 
-    spark = get_spark(
-        "opt_probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    )
+    spark = get_spark("opt_probe")
     qs = registry.queries()
     unknown = [n for n in args.queries if n not in qs]
     if unknown:

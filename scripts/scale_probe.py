@@ -1188,9 +1188,7 @@ def rounds_probe(ks: list[int]) -> None:
     )
     from myfitnesspaw_spark.sources import load_table, scatter
 
-    spark = get_spark(
-        "scale_probe_rounds", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    )
+    spark = get_spark("scale_probe_rounds")
     print(f"{'K':>3s} {'edges':>9s} {'cc_rounds':>9s} {'star_rounds':>11s}"
           f" {'cc_sec':>7s} {'star_sec':>8s}")
     for k in ks:
@@ -1248,7 +1246,7 @@ def main() -> None:
         sys.argv.pop(1)
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     only = set(sys.argv[2:])
-    spark = get_spark("scale_probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None)
+    spark = get_spark("scale_probe")
     qs = registry.queries()
     if events_mode:
         base_facts = build_scaled_events(spark, 1)

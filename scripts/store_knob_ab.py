@@ -7,6 +7,10 @@ matrix was confounded exactly that way.  Also records the store file
 count per arm (the mechanism under test: plain writes track upstream
 partitioning = core count; rebalance coalesces to the AQE advisory).
 
+Both arms run with ``spark.myfitnesspaw.store.buckets=0``: bucketed
+stores (``indexed_cc_refresh``'s shingle store) ignore the rebalance
+knob, so the plain-store fallback is what lets the toggle reach them.
+
 Usage::
 
     SPARK_GRAFT_CPUS=32 python scripts/store_knob_ab.py [--pairs 4] q1 q2 ...
@@ -51,9 +55,8 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, default=4)
     args = ap.parse_args()
 
-    spark = get_spark(
-        "store_knob_ab", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    )
+    spark = get_spark("store_knob_ab")
+    spark.conf.set("spark.myfitnesspaw.store.buckets", "0")
     qs = registry.queries()
 
     # Warmup: flagship + python workers + ONE untimed run of each target

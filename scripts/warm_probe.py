@@ -58,9 +58,7 @@ def main() -> int:
     from myfitnesspaw_spark.session import get_spark
 
     reps = int(os.environ.get("PROBE_REPS", "3"))
-    spark = get_spark(
-        "warm_probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
-    )
+    spark = get_spark("warm_probe")
     qs = registry.queries()
     baseline = bench._load_baseline()
     base_q = bench._load_baseline_queries(baseline)

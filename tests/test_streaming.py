@@ -796,3 +796,22 @@ def test_stream_table_source_scheme_case_and_single_slash_policy(tmp_path):
         assert fake.readStream.options["pathGlobFilter"] == "nation.parquet"
     finally:
         os.chdir(cwd)
+
+
+def test_stream_rollup_leaves_unset_shuffle_partitions_unset(spark, sf_dir):
+    """A stateful streaming builder sizes spark.sql.shuffle.partitions
+    for its query only.  On a session where the conf was never set (a
+    host-built session), it must be unset again afterwards — restoring
+    only a non-None prior value left every later batch query of the
+    session running at the state-partition count."""
+    from myfitnesspaw_spark.plans.etl_flow import mfp_api_stream_rollup
+
+    key = "spark.sql.shuffle.partitions"
+    fixture_value = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key, None) is None
+        assert mfp_api_stream_rollup(spark, sf_dir).count() > 0
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, fixture_value)

@@ -660,6 +660,21 @@ def test_index_store_rebalance_knob(spark, tmp_path):
     assert back.count() == 10_000
 
 
+def test_index_store_rebalance_typo_fails_loudly(spark, tmp_path):
+    """A knob value outside true/false/1/0 raises instead of silently
+    enabling (or disabling) the rebalance: ``off`` is a typo, not a
+    spelling of false."""
+    from myfitnesspaw_spark.sinks.warehouse import write_index_store
+
+    df = spark.range(0, 100)
+    spark.conf.set("spark.myfitnesspaw.store.rebalance", "off")
+    try:
+        with pytest.raises(ValueError, match="spark.myfitnesspaw.store.rebalance"):
+            write_index_store(df, str(tmp_path / "typo"))
+    finally:
+        spark.conf.unset("spark.myfitnesspaw.store.rebalance")
+
+
 def test_bucketed_index_store_layout_for_the_reader(spark, tmp_path):
     """write_bucketed_index_store returns a scan whose bucket
     partitioning feeds doc-keyed consumers with NO exchange (r21,
@@ -725,3 +740,60 @@ def test_materialize_instance_sized_reliable_knob(spark, tmp_path):
         assert found, "reliable checkpoint wrote no files"
     finally:
         spark.conf.unset("spark.myfitnesspaw.checkpoint.dir")
+
+
+def test_bucketed_index_store_paths_with_same_sanitized_name(spark, tmp_path):
+    """Store dirs whose basenames sanitize to the same identifier
+    (``sf0.1`` / ``sf0_1``) get distinct catalog tables, and each table
+    reads back its own rows when resolved by name."""
+    from myfitnesspaw_spark.sinks.warehouse import write_bucketed_index_store
+
+    before = {t.name for t in spark.catalog.listTables()}
+    a = spark.range(0, 100).select(F.col("id").alias("doc_id"))
+    b = spark.range(1000, 1050).select(F.col("id").alias("doc_id"))
+    back_a = write_bucketed_index_store(a, str(tmp_path / "x" / "sf0.1"), "doc_id", buckets=2)
+    back_b = write_bucketed_index_store(b, str(tmp_path / "y" / "sf0_1"), "doc_id", buckets=2)
+    assert sorted(r.doc_id for r in back_a.collect()) == list(range(0, 100))
+    assert sorted(r.doc_id for r in back_b.collect()) == list(range(1000, 1050))
+
+    new = sorted({t.name for t in spark.catalog.listTables()} - before)
+    assert len(new) == 2, new
+    by_name = {n: sorted(r.doc_id for r in spark.table(n).collect()) for n in new}
+    assert sorted(by_name.values()) == [list(range(0, 100)), list(range(1000, 1050))]
+    for n in new:
+        spark.sql(f"DROP TABLE IF EXISTS {n}")
+
+
+def test_reliable_checkpoint_cleanup_and_dir_mismatch_warning(spark, tmp_path, caplog):
+    """The session deletes reliable-checkpoint files once unreachable
+    (a context-start conf), and a configured checkpoint dir that the
+    SparkContext cannot adopt — it already checkpoints elsewhere —
+    logs a warning instead of being ignored silently."""
+    import logging
+
+    from myfitnesspaw_spark.checkpoints import materialize_instance_sized
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+    df = spark.range(0, 100)
+    key = "spark.myfitnesspaw.checkpoint.dir"
+    try:
+        spark.conf.set(key, str(tmp_path / "first"))
+        assert materialize_instance_sized(df).count() == 100
+        current = spark.sparkContext.getCheckpointDir()
+        assert current is not None
+
+        # Same dir as the context's (or the one it adopted): no warning.
+        caplog.clear()
+        spark.conf.set(key, current.rsplit("/", 1)[0])
+        with caplog.at_level(logging.WARNING, logger="myfitnesspaw_spark.checkpoints"):
+            assert materialize_instance_sized(df).count() == 100
+        assert not caplog.records
+
+        spark.conf.set(key, str(tmp_path / "second"))
+        with caplog.at_level(logging.WARNING, logger="myfitnesspaw_spark.checkpoints"):
+            assert materialize_instance_sized(df).count() == 100
+        assert any(str(tmp_path / "second") in r.getMessage() for r in caplog.records)
+    finally:
+        spark.conf.unset(key)
